@@ -234,7 +234,10 @@ class FhirBundles:
     ) -> None:
         """Write each resource column as its own table ``<location>.<Resource>``
         (`01_dbignite_sample.py:221-223,425-427`). ``columns=None`` writes all
-        resource columns."""
+        resource columns. With more than one table the ``entry()`` frame
+        is materialized once, eagerly, in the columnar cache and released
+        on return; a frame the caller already cached is used as it is and
+        left cached (``write.bulk_table_write``)."""
         from interop_spark.fhir.write import bulk_table_write
 
         df = self._entry_df if self._entry_df is not None else self.entry()

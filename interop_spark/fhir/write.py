@@ -16,35 +16,67 @@ catalog the session has configured.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BUNDLE_META_COLS = ("bundleUUID", "bundleId", "bundleType", "timestamp", "_file_path")
 
 
-def resolve_table_name(spark: SparkSession, location: str, table: str) -> str:
-    """Map ``location + table`` to a writable identifier, creating the
-    database if needed. 3-level names collapse to ``<cat>_<schema>`` when
+def resolve_database(spark: SparkSession, location: str) -> str:
+    """Map ``location`` to a quoted, writable database identifier,
+    creating the database if needed. A multi-level name whose head is
+    not a known catalog collapses to one database
+    (``hls_healthcare.hls_dev`` → ``hls_healthcare_hls_dev``), as when
     the session catalog is the only one available."""
     parts = [p for p in location.split(".") if p]
-    try:
-        catalogs = {c.name for c in spark.catalog.listCatalogs()}
-    except Exception:
-        catalogs = {"spark_catalog"}
-    if len(parts) >= 2 and parts[0] not in catalogs:
-        db = "_".join(parts)
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
-        return f"`{db}`.`{table}`"
-    if len(parts) == 1:
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS `{parts[0]}`")
-        return f"`{parts[0]}`.`{table}`"
+    if len(parts) >= 2:
+        try:
+            catalogs = {c.name for c in spark.catalog.listCatalogs()}
+        except Exception:
+            catalogs = {"spark_catalog"}
+        if parts[0] not in catalogs:
+            parts = ["_".join(parts)]
     db = ".".join(f"`{p}`" for p in parts)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    return f"{db}.`{table}`"
+    return db
+
+
+def resolve_table_name(spark: SparkSession, location: str, table: str) -> str:
+    """Map ``location + table`` to a writable identifier, creating the
+    database if needed (see ``resolve_database``)."""
+    return f"{resolve_database(spark, location)}.`{table}`"
 
 
 def resource_columns(df: DataFrame) -> list[str]:
     return [c for c in df.columns if c not in BUNDLE_META_COLS]
+
+
+@contextmanager
+def shared_input(df: DataFrame, targets: int) -> Iterator[DataFrame]:
+    """Yield ``df`` for ``targets`` independent write jobs, computed once.
+
+    With more than one target, each job would otherwise re-execute the
+    full input lineage (for an ``entry()`` frame: the wholetext read and
+    JSON parse of every bundle). So the frame is persisted in Spark's
+    columnar cache, materialized by one eager ``count()`` before any
+    write starts, and unpersisted on exit, also when a write raises.
+    The cache is column-striped: a write that selects one resource
+    column reads only that column's buffers. A frame the caller already
+    cached is used as it is and left cached."""
+    if targets <= 1 or df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    df = df.persist()
+    try:
+        df.count()
+        yield df
+    finally:
+        df.unpersist()
 
 
 def bulk_table_write(
@@ -57,45 +89,35 @@ def bulk_table_write(
     """Write each resource column as ``<location>.<Resource>`` with its
     bundle lineage key (+ event timestamp for message bundles).
 
-    r19 optimization round, two changes per the guide:
-
-    - With >1 target each ``saveAsTable`` would re-execute the full
-      input lineage (for an ``entry()`` frame: the wholetext read +
-      JSON parse of every bundle, once per resource type) — so the
-      input is lazily localCheckpoint'd and the parse runs once
-      (``bulk_ndjson_write`` has done this since r17; pass
-      ``materialize=False`` when the caller already checkpointed).
-    - The per-table write jobs are INDEPENDENT, so they run from a
-      small thread pool (guide §2.6 "overlap independent jobs"): one
-      table's write tail back-fills executors the next write would
-      leave idle. Table names are resolved (CREATE DATABASE) serially
-      up front — only the pure write jobs overlap.
+    With more than one target the input is materialized once, eagerly,
+    in the columnar cache before the writes start and released on
+    return (``shared_input``); a frame the caller already cached is used
+    as it is and left cached. Pass ``materialize=False`` when the caller
+    already checkpointed the frame. The database is resolved (and
+    created) once per call. The per-table write jobs are independent,
+    so they run from a small thread pool: one table's write tail
+    back-fills executors the next write would leave idle.
     """
-    spark = df.sparkSession
     targets = columns if columns is not None else resource_columns(df)
     carry = ["bundleUUID"] + (["timestamp"] if "timestamp" in df.columns else [])
-    if materialize and len(targets) > 1:
-        df = df.localCheckpoint(eager=False)
-    names = {rt: resolve_table_name(spark, location, rt) for rt in targets}
+    db = resolve_database(df.sparkSession, location)
+    with shared_input(df, len(targets) if materialize else 1) as src:
 
-    def _write(rt: str) -> None:
-        (
-            df.select(*carry, rt)
-            .write.mode(write_mode)
-            .format("parquet")
-            .saveAsTable(names[rt])
-        )
+        def _write(rt: str) -> None:
+            (
+                src.select(*carry, rt)
+                .write.mode(write_mode)
+                .format("parquet")
+                .saveAsTable(f"{db}.`{rt}`")
+            )
 
-    if len(targets) <= 1:
-        for rt in targets:
-            _write(rt)
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=min(3, len(targets))) as pool:
-        list(pool.map(inheritable_thread_target(_write), targets))
+        if len(targets) <= 1:
+            for rt in targets:
+                _write(rt)
+            return
+        with ThreadPoolExecutor(max_workers=min(3, len(targets))) as pool:
+            write = inheritable_thread_target(df.sparkSession)(_write)
+            list(pool.map(write, targets))
 
 
 def save_as_table(df: DataFrame, full_name: str, mode: str = "overwrite") -> None:
@@ -134,18 +156,15 @@ def bulk_ndjson_write(
     fields present in the source rows; ``resourceType`` is part of every
     catalog StructType and round-trips.
 
-    One write job runs per resource column, and each would re-execute
-    the full input lineage (for an ``entry()`` frame: the wholetext read
-    + JSON parse of every bundle, once per type) — so for >1 target the
-    input is lazily localCheckpoint'd: the parse runs once, the per-type
-    jobs read the materialized blocks. At real scale prefer passing a
-    narrow ``columns`` list (or staging ``entry()`` to a table) over
-    caching a full-catalog frame."""
+    With more than one target the input is materialized once, eagerly,
+    in the columnar cache and released on return (``shared_input``); a
+    frame the caller already cached is used as it is and left cached.
+    At real scale prefer passing a narrow ``columns`` list (or staging
+    ``entry()`` to a table) over caching a full-catalog frame."""
     targets = columns if columns is not None else resource_columns(df)
-    if len(targets) > 1:
-        df = df.localCheckpoint(eager=False)
-    for rt in targets:
-        exploded = df.select(F.explode(rt).alias("_r")).select(
-            F.to_json(F.col("_r")).alias("value")
-        )
-        exploded.write.mode(write_mode).text(f"{location.rstrip('/')}/{rt}")
+    with shared_input(df, len(targets)) as src:
+        for rt in targets:
+            exploded = src.select(F.explode(rt).alias("_r")).select(
+                F.to_json(F.col("_r")).alias("value")
+            )
+            exploded.write.mode(write_mode).text(f"{location.rstrip('/')}/{rt}")

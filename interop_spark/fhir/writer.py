@@ -42,6 +42,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
+from interop_spark.fhir.write import shared_input
+
 # FHIR R4 elements with cardinality 0..* among the paths this engine maps
 # (public R4 structure knowledge).
 REPEATED_SEGMENTS = frozenset(
@@ -490,16 +492,16 @@ class Bundle:
         ``<location>/<Type>/`` part files of resource JSON lines —
         the reverse of ``FhirNdjson`` and the distributed counterpart
         of ``df_to_fhir`` (no single-file bottleneck; each type writes
-        in parallel). One job per resource type re-executes the input
-        lineage; for >1 type the input is lazily localCheckpoint'd so
-        an expensive upstream (e.g. an ``entry()`` parse) runs once —
-        at real scale prefer staging the source to a table first."""
-        types = self.mm.by_resource()
-        if len(types) > 1:
-            df = df.localCheckpoint(eager=False)
-        for rt, res in self._resource_columns().items():
-            (
-                df.select(F.to_json(res).alias("value"))
-                .write.mode(write_mode)
-                .text(f"{location.rstrip('/')}/{rt}")
-            )
+        in parallel). One job runs per resource type; for more than one
+        type the input is materialized once, eagerly, in the columnar
+        cache and released on return (``write.shared_input``), so an
+        expensive upstream (e.g. an ``entry()`` parse) runs once. A
+        frame the caller already cached is used as it is and left
+        cached. At real scale prefer staging the source to a table."""
+        with shared_input(df, len(self.mm.by_resource())) as src:
+            for rt, res in self._resource_columns().items():
+                (
+                    src.select(F.to_json(res).alias("value"))
+                    .write.mode(write_mode)
+                    .text(f"{location.rstrip('/')}/{rt}")
+                )

@@ -44,6 +44,7 @@ from interop_spark.operators.theta import (
     theta_items,
     theta_sketch,
 )
+from interop_spark.queries.pipeline import query_vector
 
 _TOKS = "string_split_regex(trim(text), '\\s+')"
 
@@ -685,12 +686,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r19's scan spreading amortized the interpreted fold; a 32-way
     # split of the small local table just pays 32 Python round-trips
     e = load(spark, sf_dir, "embeddings")
-    q = [
-        float(x)
-        for x in e.where(col("vec_id") == MMR_QUERY_ID)
-        .select("embedding")
-        .collect()[0][0]
-    ]
+    q = query_vector(e, MMR_QUERY_ID)
     return mmr_rerank(e, q)
 
 

@@ -34,6 +34,18 @@ NPROBE = 3
 NEARDUP_CORPUS = 600
 NEARDUP_PLANES = 6
 
+
+def query_vector(e: DataFrame, vec_id: int) -> list[float]:
+    """The ``embedding`` of row ``vec_id`` of the ``embeddings`` frame
+    ``e``, collected to the driver as a query vector. Raises
+    ``ValueError`` naming the table and ``vec_id`` when no such row
+    exists."""
+    rows = e.where(col("vec_id") == vec_id).select("embedding").collect()
+    if not rows:
+        raise ValueError(f"embeddings has no row with vec_id={vec_id} to query with")
+    return [float(x) for x in rows[0][0]]
+
+
 # --------------------------------------------------------------------------
 # Text analysis
 # --------------------------------------------------------------------------

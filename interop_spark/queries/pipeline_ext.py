@@ -23,6 +23,7 @@ from interop_spark.queries.pipeline import (
     _dk_dot,
     _dk_norm,
     _TOKENS,
+    query_vector,
 )
 
 KM_K = N_CENTROIDS  # one Lloyd step trains the same 8 coarse centroids
@@ -60,10 +61,7 @@ def q_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         col("vec_id").alias("centroid_id"), col("embedding").alias("centroid")
     )
     index = ivf_build(e, cent)
-    qvec = [
-        float(x)
-        for x in e.where(col("vec_id") == 1).select("embedding").collect()[0][0]
-    ]
+    qvec = query_vector(e, 1)
     return index.search(qvec, k=5, nprobe=2)
 
 
@@ -543,12 +541,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbs = pq_train(
         e, m_subspaces=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=EMB_DIM
     )
-    q = [
-        float(x)
-        for x in e.where(col("vec_id") == PQ_QUERY_ID)
-        .select("embedding")
-        .collect()[0][0]
-    ]
+    q = query_vector(e, PQ_QUERY_ID)
     return pq_adc_topk(pq_encode(e, cbs), q, cbs, k=PQ_TOPK)
 
 
@@ -577,12 +570,7 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbs = pq_train(
         e, m_subspaces=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=EMB_DIM
     )
-    q = [
-        float(x)
-        for x in e.where(col("vec_id") == PQ_QUERY_ID)
-        .select("embedding")
-        .collect()[0][0]
-    ]
+    q = query_vector(e, PQ_QUERY_ID)
     return ivfpq_search(
         e, cent, cbs, q, k=PQ_TOPK, nprobe=IVFPQ_NPROBE
     )
@@ -604,12 +592,7 @@ def q_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbs = pq_train(
         e, m_subspaces=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=EMB_DIM
     )
-    q = [
-        float(x)
-        for x in e.where(col("vec_id") == PQ_QUERY_ID)
-        .select("embedding")
-        .collect()[0][0]
-    ]
+    q = query_vector(e, PQ_QUERY_ID)
     return ivfpq_rerank(
         e, cent, cbs, q, k=PQ_TOPK, shortlist=3 * PQ_TOPK,
         nprobe=IVFPQ_NPROBE,
@@ -646,12 +629,7 @@ def q_ivfpq_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbs = pq_train(
         e, m_subspaces=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=EMB_DIM
     )
-    q = [
-        float(x)
-        for x in e.where(col("vec_id") == PQ_QUERY_ID)
-        .select("embedding")
-        .collect()[0][0]
-    ]
+    q = query_vector(e, PQ_QUERY_ID)
     qv = query_vector_literal(q)
     exact_topk = (
         e.select(
@@ -927,12 +905,7 @@ def q_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = e.where(col("vec_id") < N_CENTROIDS).select(
         col("vec_id").alias("centroid_id"), col("embedding").alias("centroid")
     )
-    q = [
-        float(x)
-        for x in e.where(col("vec_id") == PQ_QUERY_ID)
-        .select("embedding")
-        .collect()[0][0]
-    ]
+    q = query_vector(e, PQ_QUERY_ID)
     return ivfpq_residual_search(
         e,
         cent,

@@ -16,6 +16,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap default: the smaller of 16 GiB and half of physical
+    RAM, so a ``local[N]`` JVM never reserves more heap than the host
+    has. 16g when physical RAM cannot be read."""
+    try:
+        with open(meminfo) as f:
+            line = next(ln for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "16g"
+    half_mb = int(line.split()[1]) // 2048
+    return f"{half_mb}m" if half_mb < 16 * 1024 else "16g"
+
+
 # Configs that matter at 100 TB, not just locally. Every one of these is a
 # stock Spark knob — no custom Catalyst rules are required for this engine
 # (see SURVEY.md §4).
@@ -41,7 +55,8 @@ ENGINE_CONF: dict[str, str] = {
     # this way). Only effective at JVM launch — a no-op when getOrCreate
     # returns an existing session, which is the desired semantics. On a
     # real cluster the deployment sets executor/driver memory instead.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    or default_driver_memory(),
 }
 
 

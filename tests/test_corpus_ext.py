@@ -444,3 +444,27 @@ def test_mmr_rerank_string_ids_and_null_embeddings(spark):
     assert [r["id"] for r in out] == ["a", "b", "c"]
     assert dict(df.dtypes)["doc"] == "string"
     assert all(r["rel_ppb"] is not None for r in out)
+
+
+@pytest.mark.parametrize("row", ["mmr_rerank", "ivfpq_search"])
+def test_missing_query_vector_is_a_named_error(spark, tmp_path, row):
+    """A seeded ``embeddings`` table without the rows' fixed query
+    vector (vec_id 1) fails with a ValueError naming the table and the
+    key, not a bare IndexError from ``collect()[0]``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from interop_spark.queries import all_queries
+    from interop_spark.queries.pipeline import query_vector
+
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    pq.write_table(
+        emb.filter(pc.not_equal(emb["vec_id"], 1)),
+        tmp_path / "embeddings.parquet",
+    )
+    with pytest.raises(ValueError, match=r"embeddings .*vec_id=1\b"):
+        all_queries()[row](spark, str(tmp_path))
+    e = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+    assert query_vector(e, 0) == [
+        float(x) for x in emb.filter(pc.equal(emb["vec_id"], 0))["embedding"][0].as_py()
+    ]

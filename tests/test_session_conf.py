@@ -1,7 +1,11 @@
 """Session-config contracts (no SparkSession needed)."""
 import os
 
-from interop_spark.session import ENGINE_CONF, object_store_conf
+from interop_spark.session import (
+    ENGINE_CONF,
+    default_driver_memory,
+    object_store_conf,
+)
 
 
 def test_engine_conf_scale_posture():
@@ -14,10 +18,30 @@ def test_engine_conf_scale_posture():
     )
     mem = ENGINE_CONF["spark.driver.memory"]
     # the conf honors the documented override (baked in at import time);
-    # only assert the 16g DEFAULT when the env hook isn't in use — a
+    # only assert the host-fit DEFAULT when the env hook isn't in use — a
     # user-chosen '24576m' or '4g' is the override working as designed
     override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-    assert mem == (override if override else "16g")
+    assert mem == (override if override else default_driver_memory())
+
+
+def _meminfo(tmp_path, total_kb: int) -> str:
+    p = tmp_path / "meminfo"
+    p.write_text(
+        f"MemTotal:       {total_kb} kB\nMemFree:        1024 kB\n"
+    )
+    return str(p)
+
+
+def test_default_driver_memory_fits_the_host(tmp_path):
+    # half of physical RAM below 32 GiB: a 15 GiB host gets a 7.5 GiB
+    # heap, not the 16g that exceeds its RAM
+    assert default_driver_memory(_meminfo(tmp_path, 15 * 1024 * 1024)) == "7680m"
+    assert default_driver_memory(_meminfo(tmp_path, 2 * 1024 * 1024)) == "1024m"
+    # capped at 16 GiB on large hosts
+    assert default_driver_memory(_meminfo(tmp_path, 32 * 1024 * 1024)) == "16g"
+    assert default_driver_memory(_meminfo(tmp_path, 128 * 1024 * 1024)) == "16g"
+    # unreadable meminfo keeps the old fixed default
+    assert default_driver_memory(str(tmp_path / "missing")) == "16g"
 
 
 def test_object_store_conf_shape():
