@@ -17,4 +17,13 @@ session    : tuned local SparkSession builder (AQE, shuffle partitions,
 
 __version__ = "0.1.0"
 
+import sys
+
+from pyspark import cloudpickle
+
 from interop_spark.session import get_spark  # noqa: F401
+
+# Executor-side Python (UDFs, mapInPandas functions and the engine helpers
+# they call) is pickled BY VALUE: workers of a plain session need no
+# interop_spark install. Registration covers every submodule.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

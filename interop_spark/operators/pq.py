@@ -32,11 +32,20 @@ L2 decomposition, encode determinism, and recall sanity.
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
-from interop_spark.operators.similarity import as_double
+from interop_spark.operators.kernels import (
+    gather,
+    row_sumsq,
+    spark_round,
+    valid_rows,
+)
+from interop_spark.operators.similarity import as_double, matrix_literal_sql
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -141,27 +150,11 @@ def pq_train(
     return cbs
 
 
-def _codebook_literal(cb_m: list[list[float]]) -> Column:
-    # ONE F.expr parse instead of k·d py4j Column constructions — plan
-    # construction was the dominant cost of every PQ query (r19; see
-    # similarity.query_vector_literal). Bit-identical literals.
-    import math
-
-    from interop_spark.operators.similarity import matrix_literal_sql
-
-    if all(math.isfinite(float(x)) for c in cb_m for x in c):
-        return F.expr(matrix_literal_sql(cb_m))
-    return F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in cb_m]
-    )
-
-
 def _table_literal(rows: list[list[float]]) -> Column:
-    """2-D double-array literal, fast path (see _codebook_literal)."""
-    import math
-
-    from interop_spark.operators.similarity import matrix_literal_sql
-
+    """2-D double-array literal as ONE ``F.expr`` parse instead of k·d
+    py4j Column constructions — plan construction was the dominant cost
+    of every PQ query (r19; see similarity.query_vector_literal).
+    Bit-identical literals."""
     if all(math.isfinite(float(x)) for r in rows for x in r):
         return F.expr(matrix_literal_sql(rows))
     return F.array(
@@ -170,7 +163,7 @@ def _table_literal(rows: list[list[float]]) -> Column:
 
 
 def pq_codes_udf(codebooks: list[list[list[float]]]):
-    """Arrow-vectorized twin of the per-subspace ``_argmin_code`` folds:
+    """Arrow-vectorized twin of the per-subspace argmin-code folds:
     a ``pandas_udf`` mapping a full vector to its ``array<int>`` of M PQ
     codes in ONE ArrowEvalPython pass (r20 optimization round, guide §4
     — the interpreted ``F.aggregate`` folds were the family's dominant
@@ -183,24 +176,14 @@ def pq_codes_udf(codebooks: list[list[list[float]]]):
       (``acc += (x_j - c_j)^2`` per j, vectorized across rows) — the
       identical IEEE-754 double operation sequence as the ``l2sq``
       fold, so the unrounded distances are bit-identical;
-    - round-9 replicates Spark's ``Round`` (BigDecimal HALF_UP on the
-      shortest-repr decimal): a fast ``floor(x*1e9+0.5)`` path, with
-      values within 1e-5 of a .5 boundary (where the scaled double
-      could disagree with the decimal digits) re-rounded exactly via
-      ``Decimal(repr(x))`` — Python's ``repr`` and Java's
-      ``Double.toString`` both emit the unique shortest round-trip
-      decimal, so the exact path IS Spark's rounding;
+    - round-9 replicates Spark's ``Round`` (``kernels.spark_round``);
     - ``argmin`` takes the FIRST minimum — the fold's strict ``<`` keeps
       the lowest code id on rounded ties;
     - NULL/NaN distances never win (fold: NULL/NaN comparisons are
       false): NaNs are masked to +inf, an all-invalid row yields the
       fold's init code 0;
     - a NULL or wrong-dimension vector yields NULL codes (callers mask
-      the same way ``pq_encode`` always has).
-
-    The closure is SELF-CONTAINED (imports + helpers inside) so
-    cloudpickle ships it by value — executors under a plain session
-    have no ``interop_spark`` on sys.path."""
+      the same way ``pq_encode`` always has)."""
     from pyspark.sql.functions import pandas_udf
 
     cbs = [[[float(x) for x in cw] for cw in cb_m] for cb_m in codebooks]
@@ -209,49 +192,20 @@ def pq_codes_udf(codebooks: list[list[list[float]]]):
 
     @pandas_udf("array<int>")
     def _codes(s):
-        import numpy as np
         import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q9 = Decimal("1E-9")
-
-        def round9(a):
-            scaled = a * 1e9
-            fl = np.floor(scaled)
-            out = np.where(np.isfinite(a), (fl + (scaled - fl >= 0.5)) / 1e9, a)
-            risky = np.isfinite(a) & (np.abs(scaled - fl - 0.5) < 1e-5)
-            if risky.any():
-                flat, src = out.ravel(), a.ravel()
-                for i in np.flatnonzero(risky.ravel()):
-                    flat[i] = float(
-                        Decimal(repr(float(src[i]))).quantize(
-                            q9, rounding=ROUND_HALF_UP
-                        )
-                    )
-            return out
 
         vals = list(s)
         out = [None] * len(vals)
-        good = [
-            i
-            for i, v in enumerate(vals)
-            if v is not None and len(v) == dim
-        ]
+        good = valid_rows(vals, dim)
         if good:
-            X = np.asarray(
-                [np.asarray(vals[i], dtype=np.float64) for i in good]
-            )
+            X = gather(vals, good)
             codes = np.empty((len(good), len(cbs)), dtype=np.int64)
             for m, cb_m in enumerate(cbs):
                 Xm = X[:, m * sub_dim : (m + 1) * sub_dim]
                 D = np.empty((len(cb_m), Xm.shape[0]))
                 for c, cw in enumerate(cb_m):
-                    acc = np.zeros(Xm.shape[0])
-                    for j in range(sub_dim):
-                        d = Xm[:, j] - cw[j]
-                        acc = acc + d * d
-                    D[c] = acc
-                D = round9(D)
+                    D[c] = row_sumsq(Xm - np.asarray(cw))
+                D = spark_round(D, 9)
                 D[np.isnan(D)] = np.inf
                 codes[:, m] = np.argmin(D, axis=0)
             codes = codes.astype(np.int32)
@@ -260,39 +214,6 @@ def pq_codes_udf(codebooks: list[list[list[float]]]):
         return pd.Series(out)
 
     return _codes
-
-
-def _argmin_code_col(sv: Column, cb_col: Column) -> Column:
-    """0-based code of the L2-nearest codeword in ``cb_col`` (an
-    ``array<array<double>>`` Column) — a fold carrying (best_dist,
-    best_idx, cur_idx); ties go to the LOWEST code id (strict <),
-    deterministically. Since r20 this interpreted fold is the REFERENCE
-    TWIN of the Arrow-vectorized ``pq_codes_udf`` (which the hot paths
-    use); ``test_pq_codes_udf_bitexact_vs_fold`` pins their equality on
-    the real fixtures. The distance is rounded to 9 decimals before
-    comparison — the engine-wide argmin/argmax posture (same as
-    ``ivf_assign``'s cosine): summation-order ULP differences between
-    engines must not flip a near-tie."""
-    init = F.struct(
-        F.lit(float("inf")).alias("bd"),
-        F.lit(0).alias("bi"),
-        F.lit(0).alias("i"),
-    )
-
-    def _step(a, cw):
-        d = F.round(l2sq(sv, cw), 9)
-        better = d < a["bd"]
-        return F.struct(
-            F.when(better, d).otherwise(a["bd"]).alias("bd"),
-            F.when(better, a["i"]).otherwise(a["bi"]).alias("bi"),
-            (a["i"] + 1).alias("i"),
-        )
-
-    return F.aggregate(cb_col, init, _step, lambda a: a["bi"])
-
-
-def _argmin_code(sv: Column, cb_m: list[list[float]]) -> Column:
-    return _argmin_code_col(sv, _codebook_literal(cb_m))
 
 
 def pq_encode(

@@ -22,8 +22,17 @@ from __future__ import annotations
 import hashlib
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from interop_spark.operators.kernels import (
+    gather,
+    row_dot,
+    row_sumsq,
+    spark_round,
+    valid_rows,
+)
 
 
 def as_double(vec: Column) -> Column:
@@ -251,110 +260,52 @@ def query_cells(
     return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["k"])
 
 
-def query_cosine_udf(
-    query_vec: list[float],
-    round_digits: int | None = None,
-    ppb: int | None = None,
-):
+def query_cosine_udf(query_vec: list[float], ppb: int):
     """Arrow-vectorized cosine-vs-fixed-query scorer — the ``pandas_udf``
-    twin of ``round(cosine_sim_given_norms(v, q, l2(v), l2(q)), d)``
-    (``round_digits`` mode, double) or of
-    ``floor(cosine_sim(v, q) * ppb)`` cast bigint (``ppb`` mode — MMR's
-    integer-quantized similarity; ``floor`` of a double is exact, so
-    that mode needs no rounding replication at all). One
-    ArrowEvalPython pass replaces the interpreted per-row fold chain
-    (r20 optimization round, guide §4).
+    twin of ``floor(cosine_sim(v, q) * ppb)`` cast bigint (MMR's
+    integer-quantized similarity; ``floor`` of a double is exact, so it
+    needs no rounding replication). One ArrowEvalPython pass replaces
+    the interpreted per-row fold chain (r20 optimization round, guide
+    §4).
 
     Bit-exactness (pinned by ``test_query_cosine_udf_bitexact``): dot
     and both norms accumulate LEFT-TO-RIGHT (the ``dot``/``l2_norm``
     IEEE-754 sequence; the query norm is computed once, exactly like a
-    factored ``_nq`` column), denominator ``max(vnorm*qnorm, 1e-12)``,
-    and round-N replicates Spark's ``Round`` (BigDecimal HALF_UP on the
-    shortest-repr decimal: fast ``floor(x*scale+0.5)`` path, exact
-    ``Decimal(repr(x))`` re-round within 1e-5 of a .5 boundary —
-    Python ``repr`` and Java ``Double.toString`` both emit the unique
-    shortest round-trip decimal). NULL / wrong-dimension vectors yield
-    NULL (the fold's NULL propagation). Marked nondeterministic so a
-    filter on the score never duplicates the evaluation (guide §4.4).
-
-    The closure is SELF-CONTAINED (imports + helpers inside) — plain-
-    session executors have no ``interop_spark`` on sys.path."""
+    factored ``_nq`` column), denominator ``max(vnorm*qnorm, 1e-12)``.
+    NULL / wrong-dimension vectors yield NULL (the fold's NULL
+    propagation). Marked nondeterministic so a filter on the score never
+    duplicates the evaluation (guide §4.4)."""
     from pyspark.sql.functions import pandas_udf
 
     qv = [float(x) for x in query_vec]
-    digits = round_digits
-    scale_ppb = ppb
-    out_type = "bigint" if ppb is not None else "double"
+    scale = float(ppb)
 
     def _score(s):
-        import numpy as np
         import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
-
-        def round_spark(a, d):
-            q = Decimal(1).scaleb(-d)
-            sc = 10.0 ** d
-            scaled = a * sc
-            fl = np.floor(scaled)
-            out = np.where(
-                np.isfinite(a), (fl + (scaled - fl >= 0.5)) / sc, a
-            )
-            risky = np.isfinite(a) & (np.abs(scaled - fl - 0.5) < 1e-5)
-            if risky.any():
-                flat, src = out.ravel(), a.ravel()
-                for i in np.flatnonzero(risky.ravel()):
-                    flat[i] = float(
-                        Decimal(repr(float(src[i]))).quantize(
-                            q, rounding=ROUND_HALF_UP
-                        )
-                    )
-            return out
 
         Q = np.asarray(qv, dtype=np.float64)
-        dim = Q.shape[0]
-        nq = 0.0
-        for j in range(dim):
-            nq = nq + Q[j] * Q[j]
-        nq = np.sqrt(nq)
+        nq = np.sqrt(row_sumsq(Q[None, :]))[0]
         vals = list(s)
         out = [None] * len(vals)
-        good = [
-            i
-            for i, v in enumerate(vals)
-            if v is not None and len(v) == dim
-        ]
+        good = valid_rows(vals, Q.shape[0])
         if good:
-            X = np.asarray(
-                [np.asarray(vals[i], dtype=np.float64) for i in good]
-            )
-            vn = np.zeros(X.shape[0])
-            for j in range(dim):
-                vn = vn + X[:, j] * X[:, j]
-            vn = np.sqrt(vn)
-            acc = np.zeros(X.shape[0])
-            for j in range(dim):
-                acc = acc + X[:, j] * Q[j]
-            c = acc / np.maximum(vn * nq, 1e-12)
-            if scale_ppb is not None:
-                scored = np.floor(c * float(scale_ppb))
-                for row_i, i in enumerate(good):
-                    x = scored[row_i]
-                    out[i] = int(x) if np.isfinite(x) else None
-            else:
-                scored = round_spark(c, digits)
-                for row_i, i in enumerate(good):
-                    x = scored[row_i]
-                    out[i] = None if np.isnan(x) else float(x)
+            X = gather(vals, good)
+            vn = np.sqrt(row_sumsq(X))
+            c = row_dot(X, Q) / np.maximum(vn * nq, 1e-12)
+            scored = np.floor(c * scale)
+            for row_i, i in enumerate(good):
+                x = scored[row_i]
+                out[i] = int(x) if np.isfinite(x) else None
         return pd.Series(out, dtype="object")
 
-    return pandas_udf(_score, out_type).asNondeterministic()
+    return pandas_udf(_score, "bigint").asNondeterministic()
 
 
 def pair_cosine_udf(round_digits: int):
     """Arrow-vectorized twin of ``round(cosine_sim(a, b), d)`` for two
     vector COLUMNS (the near-dup pair-verification scorer; r20, guide
-    §4). Same left-to-right accumulation and Spark-Round replication as
-    ``query_cosine_udf`` (pinned by ``test_pair_cosine_udf_bitexact``);
+    §4). Left-to-right accumulation and Spark-Round replication come
+    from ``kernels`` (pinned by ``test_pair_cosine_udf_bitexact``);
     rows are grouped by their common dimension so mixed-length inputs
     still score. Either side NULL or a length mismatch → NULL (the
     fold's ``zip_with`` padding makes the dot NULL). Marked
@@ -362,31 +313,8 @@ def pair_cosine_udf(round_digits: int):
     not duplicate the evaluation)."""
     from pyspark.sql.functions import pandas_udf
 
-    digits = round_digits
-
     def _score(sa, sb):
-        import numpy as np
         import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
-
-        def round_spark(a, d):
-            q = Decimal(1).scaleb(-d)
-            sc = 10.0 ** d
-            scaled = a * sc
-            fl = np.floor(scaled)
-            out = np.where(
-                np.isfinite(a), (fl + (scaled - fl >= 0.5)) / sc, a
-            )
-            risky = np.isfinite(a) & (np.abs(scaled - fl - 0.5) < 1e-5)
-            if risky.any():
-                flat, src = out.ravel(), a.ravel()
-                for i in np.flatnonzero(risky.ravel()):
-                    flat[i] = float(
-                        Decimal(repr(float(src[i]))).quantize(
-                            q, rounding=ROUND_HALF_UP
-                        )
-                    )
-            return out
 
         la, lb = list(sa), list(sb)
         out = [None] * len(la)
@@ -403,25 +331,10 @@ def pair_cosine_udf(round_digits: int):
                 for i in grp:
                     out[i] = 0.0
                 continue
-            A = np.asarray(
-                [np.asarray(la[i], dtype=np.float64) for i in grp]
-            )
-            B = np.asarray(
-                [np.asarray(lb[i], dtype=np.float64) for i in grp]
-            )
-            na = np.zeros(A.shape[0])
-            for j in range(d0):
-                na = na + A[:, j] * A[:, j]
-            na = np.sqrt(na)
-            nb = np.zeros(A.shape[0])
-            for j in range(d0):
-                nb = nb + B[:, j] * B[:, j]
-            nb = np.sqrt(nb)
-            acc = np.zeros(A.shape[0])
-            for j in range(d0):
-                acc = acc + A[:, j] * B[:, j]
-            c = acc / np.maximum(na * nb, 1e-12)
-            scored = round_spark(c, digits)
+            A, B = gather(la, grp), gather(lb, grp)
+            na, nb = np.sqrt(row_sumsq(A)), np.sqrt(row_sumsq(B))
+            c = row_dot(A, B) / np.maximum(na * nb, 1e-12)
+            scored = spark_round(c, round_digits)
             for row_i, i in enumerate(grp):
                 x = scored[row_i]
                 out[i] = None if np.isnan(x) else float(x)
@@ -450,27 +363,17 @@ def lsh_bucket_udf(planes: list[list[float]]):
 
     @pandas_udf("int")
     def _bucket(s):
-        import numpy as np
         import pandas as pd
 
         A = np.asarray(P, dtype=np.float64)
-        dim = A.shape[1]
         vals = list(s)
         out = [0] * len(vals)
-        good = [
-            i
-            for i, v in enumerate(vals)
-            if v is not None and len(v) == dim
-        ]
+        good = valid_rows(vals, A.shape[1])
         if good:
-            X = np.asarray(
-                [np.asarray(vals[i], dtype=np.float64) for i in good]
-            )
+            X = gather(vals, good)
             bucket = np.zeros(X.shape[0], dtype=np.int64)
             for p in range(A.shape[0]):
-                acc = np.zeros(X.shape[0])
-                for j in range(dim):
-                    acc = acc + X[:, j] * A[p, j]
+                acc = row_dot(X, A[p])
                 bucket = bucket + np.where(
                     ~np.isnan(acc) & (acc >= 0), 1 << p, 0
                 )
@@ -507,7 +410,12 @@ def nearest_centroid_udf(
       argmax — Spark's NaN ordering treats NaN as greater than every
       value and ``NaN >= NaN`` as true, so NaN behaves exactly like
       +inf with last-wins ties;
-    - a NULL vector (or empty centroid list) yields a NULL cell.
+    - a NULL or wrong-dimension vector, or an empty centroid list,
+      yields a NULL cell (and, with ``with_sim``, NULL ``ccos9`` and
+      ``vn``);
+    - a NULL array ELEMENT scores like NaN (Arrow hands it over as NaN),
+      so such a vector gets a cell where the fold's NULL norm gave a
+      NULL one.
 
     ``with_sim=True`` (semdedup's scoring pass) returns
     ``struct<cell:bigint, ccos9:double, vn:double>`` — the winning
@@ -516,76 +424,29 @@ def nearest_centroid_udf(
     ``round(cosine_sim(v, c_cell), 9)`` (the argmax compares the
     already-rounded values) and ``vn`` is bit-identical to the
     ``l2_norm`` fold (same accumulation + sqrt), so downstream pair
-    scoring via ``cosine_sim_given_norms`` stays exact.
-
-    Closure is SELF-CONTAINED (imports inside) — plain-session
-    executors have no ``interop_spark`` on sys.path."""
+    scoring via ``cosine_sim_given_norms`` stays exact."""
     from pyspark.sql.functions import pandas_udf
 
     ids = [int(k) for k, _ in cents]
     vecs = [[float(x) for x in v] for _, v in cents]
 
     def _cell(s):
-        import numpy as np
         import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
 
-        q9 = Decimal("1E-9")
-
-        def round9(a):
-            scaled = a * 1e9
-            fl = np.floor(scaled)
-            out = np.where(
-                np.isfinite(a), (fl + (scaled - fl >= 0.5)) / 1e9, a
-            )
-            risky = np.isfinite(a) & (np.abs(scaled - fl - 0.5) < 1e-5)
-            if risky.any():
-                flat, src = out.ravel(), a.ravel()
-                for i in np.flatnonzero(risky.ravel()):
-                    flat[i] = float(
-                        Decimal(repr(float(src[i]))).quantize(
-                            q9, rounding=ROUND_HALF_UP
-                        )
-                    )
-            return out
-
-        if not ids:
-            if with_sim:
-                return pd.DataFrame(
-                    {"cell": [None] * len(s), "ccos9": [None] * len(s)}
-                )
-            return pd.Series([None] * len(s), dtype="object")
-        C = np.asarray(vecs, dtype=np.float64)
-        dim = C.shape[1]
-        # centroid norms: left-to-right acc + x*x, then sqrt — the
-        # exact centroid_array expression sequence
-        cn = np.zeros(C.shape[0])
-        for j in range(dim):
-            cn = cn + C[:, j] * C[:, j]
-        cn = np.sqrt(cn)
-        karr = np.asarray(ids, dtype=np.int64)
         vals = list(s)
         out = [None] * len(vals)
-        good = [
-            i
-            for i, v in enumerate(vals)
-            if v is not None and len(v) == dim
-        ]
+        good = valid_rows(vals, len(vecs[0])) if ids else []
         if good:
-            X = np.asarray(
-                [np.asarray(vals[i], dtype=np.float64) for i in good]
-            )
-            vn = np.zeros(X.shape[0])
-            for j in range(dim):
-                vn = vn + X[:, j] * X[:, j]
-            vn = np.sqrt(vn)
+            C = np.asarray(vecs, dtype=np.float64)
+            # centroid norms: the exact centroid_array expression sequence
+            cn = np.sqrt(row_sumsq(C))
+            karr = np.asarray(ids, dtype=np.int64)
+            X = gather(vals, good)
+            vn = np.sqrt(row_sumsq(X))
             S = np.empty((C.shape[0], X.shape[0]))
             for c in range(C.shape[0]):
-                acc = np.zeros(X.shape[0])
-                for j in range(dim):
-                    acc = acc + X[:, j] * C[c, j]
-                S[c] = acc / np.maximum(vn * cn[c], 1e-12)
-            Sr = round9(S)
+                S[c] = row_dot(X, C[c]) / np.maximum(vn * cn[c], 1e-12)
+            Sr = spark_round(S, 9)
             S2 = Sr.copy()
             S2[np.isnan(S2)] = np.inf
             # ties (and NaN→inf runs) to the LARGEST id: last argmax
@@ -613,7 +474,8 @@ def nearest_centroid_udf(
                     if t is None
                     else {"cell": t[0], "ccos9": t[1], "vn": t[2]}
                     for t in out
-                ]
+                ],
+                columns=["cell", "ccos9", "vn"],
             )
         return pd.Series(out, dtype="object")
 
@@ -719,6 +581,27 @@ def ivf_build(
     return IVFIndex(assigned, cents, id_col, vec_col)
 
 
+def collect_centroids(
+    centroids: DataFrame,
+    centroid_id: str = "centroid_id",
+    centroid_vec: str = "centroid",
+) -> list[tuple[int, list[float]]]:
+    """The BOUNDED centroid table (C rows by contract — the coarse
+    quantizer is always small) collected EAGERLY as ``[(id, vector),
+    ...]`` sorted by id ascending, the input of ``nearest_centroid_udf``.
+    This fires one Spark job at construction time and freezes the
+    centroids as they are then."""
+    return sorted(
+        (
+            (int(r[0]), [float(x) for x in r[1]])
+            for r in centroids.select(
+                F.col(centroid_id).cast("bigint"), F.col(centroid_vec)
+            ).collect()
+        ),
+        key=lambda kv: kv[0],
+    )
+
+
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
@@ -728,53 +611,18 @@ def ivf_assign(
     centroid_vec: str = "centroid",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (max cosine) — the IVF
-    build step. The BOUNDED centroid table (C rows by contract — the
-    coarse quantizer is always small) is collected once per construction
-    and the assignment is one Arrow-vectorized projection
-    (``nearest_centroid_udf``; r20 — the r19 shape broadcast a one-row
-    centroid array and paid an interpreted per-row argmax fold, the IVF
-    family's dominant executor cost). Still zero Exchange on the vector
-    side, and the per-row work is numpy over whole Arrow batches."""
-    cents = sorted(
-        (
-            (int(r[0]), [float(x) for x in r[1]])
-            for r in centroids.select(
-                F.col(centroid_id).cast("bigint"), F.col(centroid_vec)
-            ).collect()
-        ),
-        key=lambda kv: kv[0],
-    )
+    build step. The centroid table is collected EAGERLY, once, when this
+    frame is constructed (``collect_centroids``: one Spark job; later
+    changes to ``centroids`` are not seen), and the assignment is one
+    Arrow-vectorized projection (``nearest_centroid_udf``; r20 — the r19
+    shape broadcast a one-row centroid array and paid an interpreted
+    per-row argmax fold, the IVF family's dominant executor cost). Still
+    zero Exchange on the vector side, and the per-row work is numpy over
+    whole Arrow batches. A vector with a NULL element gets a cell (see
+    ``nearest_centroid_udf``)."""
+    cents = collect_centroids(centroids, centroid_id, centroid_vec)
     cell = nearest_centroid_udf(cents)(F.col(vec_col))
     return df.select(id_col, vec_col, cell.alias("cell"))
-
-
-def _ivf_assign_fold(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "centroid",
-) -> DataFrame:
-    """REFERENCE TWIN of ``ivf_assign`` (the r19 shape): scan →
-    BroadcastNestedLoopJoin against the ONE-ROW centroid array →
-    per-row interpreted argmax fold. Kept for
-    ``test_nearest_centroid_udf_bitexact_vs_fold``, which pins the
-    Arrow path's equality on the real fixtures."""
-    cents = centroid_array(centroids, centroid_id, centroid_vec)
-    joined = df.crossJoin(F.broadcast(cents)).withColumn(
-        "_vnorm", l2_norm(as_double(F.col(vec_col)))
-    )
-    cell = nearest_centroid(
-        F.col(vec_col), F.col("_cents"), F.col("_vnorm")
-    )
-    # double-reference guard: with a single reference, CollapseProject
-    # inlines the norm into the per-centroid fold lambda, recomputing it
-    # C times per row; the isNotNull branch adds a second reference so the
-    # producing Project survives and the norm is evaluated once per row
-    # (null embeddings yield a null cell either way)
-    cell = F.when(F.col("_vnorm").isNotNull(), cell)
-    return joined.select(id_col, vec_col, cell.alias("cell"))
 
 
 # ---------------------------------------------------------------------------
@@ -859,7 +707,13 @@ def semdedup(
     within-cell pair join — quadratic IN THE CELL, the algorithm's real
     shape; cluster count must grow with the corpus so cells stay
     bounded (the paper uses ~100k clusters at web scale). The pair join
-    is an equi-join on the cell id, AQE-splittable."""
+    is an equi-join on the cell id, AQE-splittable.
+
+    Like ``ivf_assign``, this collects the centroid table EAGERLY at
+    construction (one Spark job, centroids frozen as they are then),
+    and a vector with a NULL element is kept with a cell where the r19
+    fold dropped it (see ``nearest_centroid_udf``). An empty centroid
+    table yields no rows."""
     # ONE Arrow pass scores cell + rounded centroid cosine per row (r20,
     # guide §4): the r19 shape paid the interpreted argmax fold, a
     # broadcast centroid re-join, and a second interpreted cosine fold.
@@ -867,15 +721,7 @@ def semdedup(
     # round(cosine_sim(v, c_cell), 9) (the argmax compares the rounded
     # values); the inner join it replaces only dropped NULL-cell rows,
     # which the isNotNull filter reproduces.
-    cents = sorted(
-        (
-            (int(r[0]), [float(x) for x in r[1]])
-            for r in centroids.select(
-                F.col(centroid_id).cast("bigint"), F.col(centroid_vec)
-            ).collect()
-        ),
-        key=lambda kv: kv[0],
-    )
+    cents = collect_centroids(centroids, centroid_id, centroid_vec)
     a_col = nearest_centroid_udf(cents, with_sim=True)(F.col(vec_col))
     scored = (
         df.select(F.col(id_col), F.col(vec_col), a_col.alias("_a"))

@@ -89,12 +89,13 @@ def bpe_word_pieces(
     stays on the same pair while occurrences remain; pinned against a
     fuse-all reference in test_bpe_encode.py.) No end-of-word marker —
     the toy table carries none."""
-    ranks = {
-        pair: i
-        for i, pair in enumerate(
-            merges if merges is not None else DEFAULT_BPE_MERGES
-        )
-    }
+    table = merges if merges is not None else DEFAULT_BPE_MERGES
+    return _bpe_merge(word, {pair: i for i, pair in enumerate(table)})
+
+
+def _bpe_merge(word: str, ranks: dict) -> list[str]:
+    """The merge loop of ``bpe_word_pieces`` against a prebuilt
+    ``{pair: rank}`` dict."""
     pieces = list(word)
     while len(pieces) > 1:
         best, bi = None, -1
@@ -116,8 +117,8 @@ def bpe_pieces_udf(merges: list[tuple[str, str]] | None = None):
     equi-join the (word → pieces) dictionary back onto the exploded
     tokens. At corpus scale the dictionary is orders of magnitude
     smaller than the token stream, so the only Python in the pipeline
-    touches the small side. The closure is self-contained (merge table
-    captured by value; no interop_spark imports on executors)."""
+    touches the small side. The rank dict is built once per Arrow
+    batch."""
     table = list(merges if merges is not None else DEFAULT_BPE_MERGES)
 
     from pyspark.sql.functions import pandas_udf
@@ -125,23 +126,9 @@ def bpe_pieces_udf(merges: list[tuple[str, str]] | None = None):
     @pandas_udf("string")
     def _enc(words):  # pd.Series -> pd.Series
         ranks = {pair: i for i, pair in enumerate(table)}
-
-        def enc(w):
-            if w is None:
-                return None
-            pieces = list(w)
-            while len(pieces) > 1:
-                best, bi = None, -1
-                for i in range(len(pieces) - 1):
-                    r = ranks.get((pieces[i], pieces[i + 1]))
-                    if r is not None and (best is None or r < best):
-                        best, bi = r, i
-                if best is None:
-                    break
-                pieces[bi : bi + 2] = [pieces[bi] + pieces[bi + 1]]
-            return " ".join(pieces)
-
-        return words.map(enc)
+        return words.map(
+            lambda w: None if w is None else " ".join(_bpe_merge(w, ranks))
+        )
 
     return _enc
 
@@ -657,9 +644,9 @@ def bpe_train_merges_list(wf, rounds: int = 4) -> list[tuple]:
     so one collect replaces the per-round argmax job + window-rebuild
     checkpoint job (~2 jobs x rounds of pure scheduling overhead; the
     corpus itself is only ever touched by the caller's word-frequency
-    aggregate, unchanged). The Python loop mirrors the windowed frame
-    implementation term for term — `_bpe_train_merges_frames` below is
-    kept as the REFERENCE TWIN and
+    aggregate, unchanged). The Python loop mirrors the r19 windowed frame
+    implementation term for term — that implementation is kept as the
+    reference twin in the tests, and
     ``test_bpe_train_merges_list_equals_frames`` pins list equality on
     the real fixture:
 
@@ -711,96 +698,6 @@ def bpe_train_merges_list(wf, rounds: int = 4) -> list[tuple]:
                     i += 1
             new_words.append((out, c))
         words = new_words
-    return merges
-
-
-def _bpe_train_merges_frames(wf, rounds: int = 4) -> list[tuple]:
-    """REFERENCE TWIN of :func:`bpe_train_merges_list` — the r19
-    windowed frame implementation (one exchange+sort per round via the
-    shared (w, pos) window family, per-round argmax as a TakeOrdered
-    collect). Kept for the equivalence pin; hot paths use the
-    driver-side loop."""
-    from pyspark.sql import Window
-
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
-
-    seq = wf.select(
-        "w", "c", F.posexplode(F.split("w", "")).alias("pos", "sym")
-    )
-    wseq = Window.partitionBy("w").orderBy("pos")
-    wcum = wseq.rowsBetween(Window.unboundedPreceding, 0)
-    merges: list[tuple] = []
-    for r in range(1, rounds + 1):
-        paired = seq.withColumn("nxt", F.lead("sym", 1).over(wseq))
-        counts = (
-            paired.where(F.col("nxt").isNotNull())
-            .groupBy(F.col("sym").alias("a"), F.col("nxt").alias("b"))
-            .agg(F.sum("c").alias("pair_count"))
-        )
-        # the argmax pair is ONE row — fetch it to the driver (the
-        # PQ-codebook bounded-model pattern) and splice it in as
-        # literals. (Pre-r19 this was localCheckpoint + take + a
-        # crossJoin(broadcast) — three jobs per round where one
-        # TakeOrdered collect suffices; same argmax, same tie order.)
-        best_row = (
-            counts.orderBy(F.col("pair_count").desc(), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not best_row:  # vocabulary exhausted: no pairs remain
-            break
-        a_v, b_v = best_row[0]["a"], best_row[0]["b"]
-        merges.append((r, a_v, b_v, a_v + b_v, int(best_row[0]["pair_count"])))
-        if r == rounds:  # the rebuilt symbol table has no consumer
-            break
-        m = paired.withColumn(
-            "is_match",
-            (F.col("sym") == F.lit(a_v)) & (F.col("nxt") == F.lit(b_v)),
-        )
-        # Greedy left-to-right keep via run parity, ALL on the one
-        # (w, pos) window: cnt = running match count, a run starts
-        # where a match follows a non-match, c0 = cnt at the current
-        # run's start (last_value ignoreNulls), and a match is kept iff
-        # its within-run index cnt − c0 + 1 is odd. Identical keep set
-        # to the pre-r19 (w, pos − cnt, is_match)-partitioned
-        # row_number — consecutive matches share pos − cnt exactly when
-        # they are one run — but every window here shares the SAME
-        # (w, pos) partitioning, so each round pays ONE exchange + sort
-        # instead of two (r19 optimization round).
-        g = m.withColumn(
-            "cnt", F.sum(F.col("is_match").cast("int")).over(wcum)
-        )
-        s = g.withColumn(
-            "s",
-            F.col("is_match")
-            & ~F.coalesce(F.lag("is_match", 1).over(wseq), F.lit(False)),
-        )
-        i = s.withColumn(
-            "c0",
-            F.last(F.when(F.col("s"), F.col("cnt")), ignorenulls=True).over(
-                wcum
-            ),
-        )
-        k = i.withColumn(
-            "keep",
-            F.col("is_match") & ((F.col("cnt") - F.col("c0")) % 2 == 0),
-        )
-        d = k.withColumn(
-            "consumed", F.lag("keep", 1, False).over(wseq)
-        )
-        seq = (
-            d.where(~F.col("consumed"))
-            .select(
-                "w",
-                "c",
-                (F.row_number().over(wseq) - 1).alias("pos"),
-                F.when(
-                    F.col("keep"), F.concat("sym", "nxt")
-                ).otherwise(F.col("sym")).alias("sym"),
-            )
-            .localCheckpoint()
-        )
     return merges
 
 

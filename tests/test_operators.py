@@ -382,17 +382,102 @@ def test_pq_adc_equals_exact_distance_to_reconstruction(spark, sf_dir):
     assert top[0].adc_dist <= top[-1].adc_dist
 
 
+def _bpe_train_merges_frames(wf, rounds: int = 4) -> list[tuple]:
+    """REFERENCE TWIN of :func:`bpe_train_merges_list` — the r19
+    windowed frame implementation (one exchange+sort per round via the
+    shared (w, pos) window family, per-round argmax as a TakeOrdered
+    collect)."""
+    from pyspark.sql import Window
+
+    if rounds < 1:
+        raise ValueError(f"rounds must be >= 1, got {rounds}")
+
+    seq = wf.select(
+        "w", "c", F.posexplode(F.split("w", "")).alias("pos", "sym")
+    )
+    wseq = Window.partitionBy("w").orderBy("pos")
+    wcum = wseq.rowsBetween(Window.unboundedPreceding, 0)
+    merges: list[tuple] = []
+    for r in range(1, rounds + 1):
+        paired = seq.withColumn("nxt", F.lead("sym", 1).over(wseq))
+        counts = (
+            paired.where(F.col("nxt").isNotNull())
+            .groupBy(F.col("sym").alias("a"), F.col("nxt").alias("b"))
+            .agg(F.sum("c").alias("pair_count"))
+        )
+        # the argmax pair is ONE row — fetch it to the driver (the
+        # PQ-codebook bounded-model pattern) and splice it in as
+        # literals. (Pre-r19 this was localCheckpoint + take + a
+        # crossJoin(broadcast) — three jobs per round where one
+        # TakeOrdered collect suffices; same argmax, same tie order.)
+        best_row = (
+            counts.orderBy(F.col("pair_count").desc(), "a", "b")
+            .limit(1)
+            .collect()
+        )
+        if not best_row:  # vocabulary exhausted: no pairs remain
+            break
+        a_v, b_v = best_row[0]["a"], best_row[0]["b"]
+        merges.append((r, a_v, b_v, a_v + b_v, int(best_row[0]["pair_count"])))
+        if r == rounds:  # the rebuilt symbol table has no consumer
+            break
+        m = paired.withColumn(
+            "is_match",
+            (F.col("sym") == F.lit(a_v)) & (F.col("nxt") == F.lit(b_v)),
+        )
+        # Greedy left-to-right keep via run parity, ALL on the one
+        # (w, pos) window: cnt = running match count, a run starts
+        # where a match follows a non-match, c0 = cnt at the current
+        # run's start (last_value ignoreNulls), and a match is kept iff
+        # its within-run index cnt − c0 + 1 is odd. Identical keep set
+        # to the pre-r19 (w, pos − cnt, is_match)-partitioned
+        # row_number — consecutive matches share pos − cnt exactly when
+        # they are one run — but every window here shares the SAME
+        # (w, pos) partitioning, so each round pays ONE exchange + sort
+        # instead of two (r19 optimization round).
+        g = m.withColumn(
+            "cnt", F.sum(F.col("is_match").cast("int")).over(wcum)
+        )
+        s = g.withColumn(
+            "s",
+            F.col("is_match")
+            & ~F.coalesce(F.lag("is_match", 1).over(wseq), F.lit(False)),
+        )
+        i = s.withColumn(
+            "c0",
+            F.last(F.when(F.col("s"), F.col("cnt")), ignorenulls=True).over(
+                wcum
+            ),
+        )
+        k = i.withColumn(
+            "keep",
+            F.col("is_match") & ((F.col("cnt") - F.col("c0")) % 2 == 0),
+        )
+        d = k.withColumn(
+            "consumed", F.lag("keep", 1, False).over(wseq)
+        )
+        seq = (
+            d.where(~F.col("consumed"))
+            .select(
+                "w",
+                "c",
+                (F.row_number().over(wseq) - 1).alias("pos"),
+                F.when(
+                    F.col("keep"), F.concat("sym", "nxt")
+                ).otherwise(F.col("sym")).alias("sym"),
+            )
+            .localCheckpoint()
+        )
+    return merges
+
+
 def test_bpe_train_merges_list_equals_frames(spark, sf_dir):
     """The driver-side BPE training loop (r20) must learn the identical
     merge list to the windowed frame reference on the real fixture's
     word-frequency table (argmax ties, greedy run-parity keep set, and
     pair counts all pinned by list equality)."""
     from interop_spark.io import load
-    from interop_spark.operators.text import (
-        _bpe_train_merges_frames,
-        bpe_train_merges_list,
-        tokens,
-    )
+    from interop_spark.operators.text import bpe_train_merges_list, tokens
 
     d = load(spark, sf_dir, "documents")
     wf = (
@@ -428,18 +513,39 @@ def test_minhash_signature_expr_equivalent(spark, sf_dir):
     assert all(list(r.a) == list(r.b) for r in rows)
 
 
+def _argmin_code(sv, cb_m: list[list[float]]):
+    """REFERENCE TWIN of ``pq_codes_udf`` for one subspace: 0-based code
+    of the L2-nearest codeword in ``cb_m`` — an interpreted fold carrying
+    (best_dist, best_idx, cur_idx) over the codebook literal; the
+    distance is rounded to 9 decimals and ties go to the LOWEST code id
+    (strict <)."""
+    from interop_spark.operators.pq import _table_literal, l2sq
+
+    init = F.struct(
+        F.lit(float("inf")).alias("bd"),
+        F.lit(0).alias("bi"),
+        F.lit(0).alias("i"),
+    )
+
+    def _step(a, cw):
+        d = F.round(l2sq(sv, cw), 9)
+        better = d < a["bd"]
+        return F.struct(
+            F.when(better, d).otherwise(a["bd"]).alias("bd"),
+            F.when(better, a["i"]).otherwise(a["bi"]).alias("bi"),
+            (a["i"] + 1).alias("i"),
+        )
+
+    return F.aggregate(_table_literal(cb_m), init, _step, lambda a: a["bi"])
+
+
 def test_pq_codes_udf_bitexact_vs_fold(spark, sf_dir):
     """The Arrow-vectorized ``pq_codes_udf`` (r20) must reproduce the
     interpreted argmin-fold reference code-for-code on the real fixture
     — left-to-right accumulation, round-9 HALF_UP, ties to the lowest
     code, NULL/wrong-dim rows to NULL codes."""
     from interop_spark.io import load
-    from interop_spark.operators.pq import (
-        _argmin_code,
-        pq_codes_udf,
-        pq_train,
-        subvector,
-    )
+    from interop_spark.operators.pq import pq_codes_udf, pq_train, subvector
     from interop_spark.operators.similarity import as_double
 
     e = load(spark, sf_dir, "embeddings")
@@ -468,16 +574,37 @@ def test_pq_codes_udf_bitexact_vs_fold(spark, sf_dir):
         assert ref == got, (r.vec_id, ref, got)
 
 
+def _ivf_assign_fold(df, centroids):
+    """REFERENCE TWIN of ``ivf_assign`` (the r19 shape): scan →
+    BroadcastNestedLoopJoin against the ONE-ROW centroid array →
+    per-row interpreted argmax fold."""
+    from interop_spark.operators.similarity import (
+        as_double,
+        centroid_array,
+        l2_norm,
+        nearest_centroid,
+    )
+
+    cents = centroid_array(centroids)
+    joined = df.crossJoin(F.broadcast(cents)).withColumn(
+        "_vnorm", l2_norm(as_double(F.col("embedding")))
+    )
+    cell = nearest_centroid(
+        F.col("embedding"), F.col("_cents"), F.col("_vnorm")
+    )
+    # a second reference keeps the norm's Project (evaluated once per
+    # row); null embeddings yield a null cell either way
+    cell = F.when(F.col("_vnorm").isNotNull(), cell)
+    return joined.select("vec_id", "embedding", cell.alias("cell"))
+
+
 def test_nearest_centroid_udf_bitexact_vs_fold(spark, sf_dir):
     """The Arrow-vectorized IVF assignment (r20) must reproduce the
     interpreted argmax-fold reference cell-for-cell on the real fixture
     — round-9 HALF_UP cosine, ties to the largest id, NULL vector to
     NULL cell."""
     from interop_spark.io import load
-    from interop_spark.operators.similarity import (
-        _ivf_assign_fold,
-        ivf_assign,
-    )
+    from interop_spark.operators.similarity import ivf_assign
 
     e = load(spark, sf_dir, "embeddings")
     cent = e.where(F.col("vec_id") < 8).select(
@@ -497,16 +624,43 @@ def test_nearest_centroid_udf_bitexact_vs_fold(spark, sf_dir):
     assert _ivf_assign_fold(bad, cent).collect()[0].cell is None
 
 
+def test_nearest_centroid_udf_empty_centroids(spark):
+    """An empty centroid list yields NULL cells in both modes (with_sim
+    keeps its full struct<cell, ccos9, vn>), so semdedup over an empty
+    centroid frame returns no rows instead of failing on the UDF's
+    return schema."""
+    from interop_spark.operators.similarity import (
+        nearest_centroid_udf,
+        semdedup,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None)], "vec_id long, embedding array<float>"
+    )
+    rows = df.select(
+        nearest_centroid_udf([])(F.col("embedding")).alias("c"),
+        nearest_centroid_udf([], with_sim=True)(F.col("embedding")).alias(
+            "s"
+        ),
+    ).collect()
+    assert len(rows) == 2
+    for r in rows:
+        assert r.c is None
+        assert (r.s.cell, r.s.ccos9, r.s.vn) == (None, None, None)
+    empty = spark.createDataFrame(
+        [], "centroid_id long, centroid array<float>"
+    )
+    assert semdedup(df, empty).collect() == []
+
+
 def test_query_cosine_udf_bitexact(spark, sf_dir):
     """The Arrow query-cosine scorer (r20) must reproduce the
-    interpreted fold chain value-for-value on the real fixture, in both
-    round-6 and floor-ppb modes (incl. NULL propagation)."""
+    interpreted floor-ppb fold chain value-for-value on the real fixture
+    (incl. NULL propagation)."""
     from interop_spark.io import load
     from interop_spark.operators.similarity import (
         as_double,
         cosine_sim,
-        cosine_sim_given_norms,
-        l2_norm,
         query_cosine_udf,
         query_vector_literal,
     )
@@ -514,40 +668,28 @@ def test_query_cosine_udf_bitexact(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     q = [float(x) for x in e.where(F.col("vec_id") == 0).first()[1]]
     qv = query_vector_literal(q)
-    ref6 = F.round(
-        cosine_sim_given_norms(
-            as_double(F.col("embedding")),
-            as_double(qv),
-            l2_norm(as_double(F.col("embedding"))),
-            l2_norm(as_double(qv)),
-        ),
-        6,
-    )
     refppb = F.floor(
         cosine_sim(as_double(F.col("embedding")), as_double(qv))
         * F.lit(1e9)
     ).cast("bigint")
     rows = e.select(
         "vec_id",
-        ref6.alias("r6"),
         refppb.alias("rp"),
-        query_cosine_udf(q, round_digits=6)(F.col("embedding")).alias(
-            "g6"
-        ),
         query_cosine_udf(q, ppb=1_000_000_000)(
             F.col("embedding")
         ).alias("gp"),
     ).collect()
     assert len(rows) > 0
     for r in rows:
-        assert r.r6 == r.g6, (r.vec_id, r.r6, r.g6)
         assert r.rp == r.gp, (r.vec_id, r.rp, r.gp)
     bad = spark.createDataFrame(
         [(9001, None), (9002, [0.5, 0.25])],
         "vec_id long, embedding array<float>",
     )
     got = bad.select(
-        query_cosine_udf(q, round_digits=6)(F.col("embedding")).alias("g")
+        query_cosine_udf(q, ppb=1_000_000_000)(F.col("embedding")).alias(
+            "g"
+        )
     ).collect()
     assert all(r.g is None for r in got)
 
